@@ -181,22 +181,26 @@ _MISSING = object()  # lr_context_matrix legitimately returns None
 _EVEC_PACK_CACHE: dict[int, tuple] = {}
 
 
+def _build_evec_pack(evecs: dict):
+    """{entity_id: vector} → (row index by id, float64 matrix)."""
+    eids = sorted(evecs)
+    # stored float64 (exact embedding of the float32 vectors) so the
+    # per-candidate gather feeds cosine_batch conversion-free.
+    # Trailing ZERO row: a sense whose entity_id has no entities row
+    # (referential-integrity violation in the KB) scores with the zero
+    # vector — spec.centroid's empty-vocab result and the shuffle
+    # path's left-join default — instead of KeyError-ing
+    rows = [evecs[e] for e in eids]
+    rows.append(np.zeros(spec.EMBED_DIM, dtype=np.float64))
+    return {e: i for i, e in enumerate(eids)}, np.stack(rows, dtype=np.float64)
+
+
 def _evec_pack(evecs: dict, cache_key: int):
     pack = _EVEC_PACK_CACHE.get(cache_key)
     if pack is None:
-        eids = sorted(evecs)
-        idx = {e: i for i, e in enumerate(eids)}
-        # stored float64 (exact embedding of the float32 vectors) so
-        # the per-candidate gather feeds cosine_batch conversion-free.
-        # Trailing ZERO row: a sense whose entity_id has no entities
-        # row (referential-integrity violation in the KB) scores with
-        # the zero vector — spec.centroid's empty-vocab result and the
-        # shuffle path's left-join default — instead of KeyError-ing
-        rows = [evecs[e] for e in eids]
-        rows.append(np.zeros(spec.EMBED_DIM, dtype=np.float64))
-        E = np.stack(rows, dtype=np.float64)
+        pack = _build_evec_pack(evecs)
         _EVEC_PACK_CACHE.clear()
-        _EVEC_PACK_CACHE[cache_key] = pack = (idx, E)
+        _EVEC_PACK_CACHE[cache_key] = pack
     return pack
 
 
@@ -408,10 +412,16 @@ def _pick_all(
     tokens_by_row, found_by_row, gaz, evecs, score_mode, vec_fn, evec_key,
     interned=None,
 ):
+    """``evec_key`` is the evec broadcast id the packed matrix is
+    cached under; None packs ``evecs`` for this call only (the
+    shuffle kernel's per-batch vectors)."""
     if score_mode == "centroid":
+        pack = (
+            _build_evec_pack(evecs) if evec_key is None
+            else _evec_pack(evecs, evec_key)
+        )
         return _pick_batch_centroid(
-            tokens_by_row, found_by_row, gaz, _evec_pack(evecs, evec_key),
-            vec_fn, interned,
+            tokens_by_row, found_by_row, gaz, pack, vec_fn, interned
         )
     return _pick_rows_fallback(
         tokens_by_row, found_by_row, gaz, evecs, score_mode, vec_fn
@@ -534,6 +544,39 @@ def _score_senses(senses, tokens, begin, end, evecs, score_mode, ctx_cache, vec_
     ]
 
 
+def _turn_layout(conv: DataFrame, n_partitions: int | None) -> DataFrame:
+    """The kernels' input layout: only the columns they read (guide
+    §4 — mapInPandas is opaque to Catalyst's pruning, so without the
+    select unused columns like ts cross the Arrow boundary on every
+    row), hash-partitioned by conv_id and sorted by (conv_id,
+    turn_idx) inside each partition, so each conversation arrives
+    contiguous and turn-ordered (the north-rule layout, mirroring
+    grisp's one-page-per-map-call atomicity,
+    LabelSensesStep.java:199-311)."""
+    n_partitions = n_partitions or conv.sparkSession.sparkContext.defaultParallelism
+    return conv.select(
+        "conv_id", "turn_idx", "role", "tool", "text"
+    ).repartition(n_partitions, "conv_id").sortWithinPartitions(
+        "conv_id", "turn_idx"
+    )
+
+
+_MENTION_COLS = ("begin", "end", "surface", "entity_id", "score")
+
+
+def _linked_frame(pdf: pd.DataFrame, picked_by_row) -> pd.DataFrame:
+    """One LINKED_SCHEMA row per picked mention of each ``pdf`` row,
+    built column-wise (a row gather plus one transpose)."""
+    ridx = [i for i, picked in enumerate(picked_by_row) for _ in picked]
+    out = pdf[["conv_id", "turn_idx", "role", "tool"]].iloc[ridx]
+    out = out.reset_index(drop=True)
+    mentions = [m for picked in picked_by_row for m in picked]
+    cols = zip(*mentions) if mentions else [[]] * len(_MENTION_COLS)
+    for name, col in zip(_MENTION_COLS, cols):
+        out[name] = col
+    return out
+
+
 def link_mentions(
     conv: DataFrame,
     gaz_bc,
@@ -542,14 +585,9 @@ def link_mentions(
     score_mode: str = "centroid",
     wvec_bc=None,
 ) -> DataFrame:
-    """conversations → linked mentions.
-
-    Repartitions by conv_id with a secondary sort on turn_idx (the
-    north-rule layout: each conversation contiguous and ordered inside
-    a partition, mirroring grisp's one-page-per-map-call atomicity,
-    LabelSensesStep.java:199-311)."""
-    n_partitions = n_partitions or conv.sparkSession.sparkContext.defaultParallelism
-
+    """conversations → linked mentions, one Arrow pass over
+    _turn_layout. Rows need not be unique per (conv_id, turn_idx):
+    each row links on its own."""
     # driver-side stable broadcast ids, captured into the closure
     cache_key = gaz_bc._jbroadcast.id()
     evec_key = evec_bc._jbroadcast.id()
@@ -564,40 +602,25 @@ def link_mentions(
                 pdf["text"].tolist(), gaz, evecs, idx, score_mode, vec_fn,
                 evec_key,
             )
-            conv_ids = pdf["conv_id"].tolist()
-            turn_idxs = pdf["turn_idx"].tolist()
-            roles = pdf["role"].tolist()
-            tools = pdf["tool"].tolist()
-            out: dict[str, list] = {
-                "conv_id": [], "turn_idx": [], "role": [], "tool": [],
-                "begin": [], "end": [], "surface": [], "entity_id": [],
-                "score": [],
-            }
-            for i, picked in enumerate(picked_by_row):
-                for begin, end, surface, eid, score in picked:
-                    out["conv_id"].append(conv_ids[i])
-                    out["turn_idx"].append(turn_idxs[i])
-                    out["role"].append(roles[i])
-                    out["tool"].append(tools[i])
-                    out["begin"].append(begin)
-                    out["end"].append(end)
-                    out["surface"].append(surface)
-                    out["entity_id"].append(eid)
-                    out["score"].append(score)
-            yield pd.DataFrame(out)
+            yield _linked_frame(pdf, picked_by_row)
 
-    # guide §4: ship ONLY the columns the kernel reads (mapInPandas is
-    # opaque to Catalyst's pruning — without the select, unused input
-    # columns like ts cross the Arrow boundary on every row)
-    laid_out = conv.select(
-        "conv_id", "turn_idx", "role", "tool", "text"
-    ).repartition(n_partitions, "conv_id").sortWithinPartitions(
-        "conv_id", "turn_idx"
-    )
-    return laid_out.mapInPandas(run, schema=LINKED_SCHEMA)
+    return _turn_layout(conv, n_partitions).mapInPandas(run, schema=LINKED_SCHEMA)
 
 
 TRIPLES_SCHEMA = "conv_id string, turn_idx int, subj long, pred string, obj string"
+
+
+def _triples_frame(pdf: pd.DataFrame, picked_by_row, canon_get, carry):
+    """TRIPLES_SCHEMA frame of ``pdf``'s linked rows, given in
+    (conv_id, turn_idx) order, under spec's turn-window rule, and the
+    window carry for the rows that follow."""
+    cols, carry = spec.window_triples(
+        pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(),
+        pdf["role"].tolist(), pdf["tool"].tolist(),
+        [{canon_get(p[3], p[3]) for p in picked} for picked in picked_by_row],
+        carry,
+    )
+    return pd.DataFrame(cols), carry
 
 
 def link_and_extract(
@@ -612,23 +635,23 @@ def link_and_extract(
     """Fused map-side pipeline: detection + linking + canonicalization
     + per-turn-window triple extraction in ONE Arrow pass.
 
-    The repartition(conv_id) + sortWithinPartitions(turn_idx) layout
-    guarantees each conversation arrives contiguous and turn-ordered
+    _turn_layout delivers each conversation contiguous and turn-ordered
     inside its partition, so the 2-turn window is a running carry
-    (prev conv_id / prev entity set) held ACROSS pandas batches of the
-    same partition — no groupBy, no window shuffle, no explode. After
-    the single layout shuffle, triple extraction is embarrassingly
-    parallel, which is grisp's own architecture (everything map-side
-    against broadcast caches, README.md:9) and the reason the job
-    scales linearly at 10^12 turns.
+    (spec.window_triples' previous conv_id / turn_idx / entity set)
+    held ACROSS pandas batches of the same partition — no groupBy, no
+    window shuffle, no explode. After the single layout shuffle,
+    triple extraction is embarrassingly parallel, which is grisp's own
+    architecture (everything map-side against broadcast caches,
+    README.md:9) and the reason the job scales linearly at 10^12
+    turns.
 
-    Semantics are bit-identical to the staged path
+    The window follows spec's turn-window rule (literal turn t-1, a
+    reset at every turn_idx gap), the same rule the staged path
     (link_mentions → canonicalize.rewrite_linked →
-    triples.extract_triples); tests assert all three agree with the
-    reference oracle. ``canon_bc`` broadcasts {entity_id:
+    triples.extract_triples) evaluates in SQL; a duplicate
+    (conv_id, turn_idx) key fails the task with spec's
+    duplicate_key_error. ``canon_bc`` broadcasts {entity_id:
     canonical_id} from canonicalize.canonical_map."""
-    n_partitions = n_partitions or conv.sparkSession.sparkContext.defaultParallelism
-
     # driver-side stable broadcast ids, captured into the closure
     cache_key = gaz_bc._jbroadcast.id()
     evec_key = evec_bc._jbroadcast.id()
@@ -636,100 +659,16 @@ def link_and_extract(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gaz = gaz_bc.value
         evecs = evec_bc.value
-        canon = canon_bc.value
+        canon_get = canon_bc.value.get
         vec_fn = spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else None
         idx = _first_token_index(gaz, cache_key)
-        prev_conv: str | None = None
-        prev_set: set[int] = set()
+        carry = spec.NO_TURN
         for pdf in batches:
             picked_by_row = _link_rows(
                 pdf["text"].tolist(), gaz, evecs, idx, score_mode, vec_fn,
                 evec_key,
             )
-            conv_ids = pdf["conv_id"].tolist()
-            turn_idxs = pdf["turn_idx"].tolist()
-            roles = pdf["role"].tolist()
-            tools = pdf["tool"].tolist()
-            # bound-method locals: the emit path appends ~3 triples per
-            # turn × 5 columns — a closure call + dict lookup per emit
-            # was ~25% of kernel time in the r8 profile
-            o_conv: list = []
-            o_turn: list = []
-            o_subj: list = []
-            o_pred: list = []
-            o_obj: list = []
-            ap_c, ap_t, ap_s = o_conv.append, o_turn.append, o_subj.append
-            ap_p, ap_o = o_pred.append, o_obj.append
-            canon_get = canon.get
-            for i, picked in enumerate(picked_by_row):
-                cid = conv_ids[i]
-                tix = turn_idxs[i]
-                if cid != prev_conv:
-                    prev_conv, prev_set = cid, set()
-                cur = {canon_get(p[3], p[3]) for p in picked}
-                tool = tools[i]
-                if tool is not None and tool != tool:  # NaN guard
-                    tool = None
-                role = roles[i]
-                for e in sorted(cur):
-                    ap_c(cid), ap_t(tix), ap_s(e)
-                    ap_p("mentioned_by"), ap_o(role)
-                    if tool is not None:
-                        ap_c(cid), ap_t(tix), ap_s(e)
-                        ap_p("used_with_tool"), ap_o(tool)
-                window = sorted(prev_set | cur)
-                for j, a in enumerate(window):
-                    for b in window[j + 1 :]:
-                        if a in cur or b in cur:
-                            ap_c(cid), ap_t(tix), ap_s(a)
-                            ap_p("co_occurs_with"), ap_o(str(b))
-                prev_set = cur
-            yield pd.DataFrame(
-                {"conv_id": o_conv, "turn_idx": o_turn, "subj": o_subj,
-                 "pred": o_pred, "obj": o_obj}
-            )
+            triples, carry = _triples_frame(pdf, picked_by_row, canon_get, carry)
+            yield triples
 
-    # guide §4: only the kernel's input columns cross the Arrow
-    # boundary (ts in particular never did anything but serialize)
-    laid_out = conv.select(
-        "conv_id", "turn_idx", "role", "tool", "text"
-    ).repartition(n_partitions, "conv_id").sortWithinPartitions(
-        "conv_id", "turn_idx"
-    )
-    return laid_out.mapInPandas(run, schema=TRIPLES_SCHEMA)
-
-
-def detect_only(conv: DataFrame, gaz_bc, n_partitions: int | None = None) -> DataFrame:
-    """Detection without linking (text-occurrence side, A3 analogue) —
-    used by the stats stage and unit tests."""
-    n_partitions = n_partitions or conv.sparkSession.sparkContext.defaultParallelism
-
-    # driver-side stable broadcast id, captured into the closure
-    cache_key = gaz_bc._jbroadcast.id()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gaz = gaz_bc.value
-        idx = _first_token_index(gaz, cache_key)
-        for pdf in batches:
-            rows = {"conv_id": [], "turn_idx": [], "begin": [], "end": [], "surface": []}
-            conv_ids = pdf["conv_id"].tolist()
-            turn_idxs = pdf["turn_idx"].tolist()
-            tokens_by_row = [spec.tokenize(t or "") for t in pdf["text"].tolist()]
-            found_by_row = _detect_all(
-                tokens_by_row, gaz, idx, _intern_tokens(tokens_by_row)
-            )
-            for i, found in enumerate(found_by_row):
-                for begin, end, surface in found:
-                    rows["conv_id"].append(conv_ids[i])
-                    rows["turn_idx"].append(turn_idxs[i])
-                    rows["begin"].append(begin)
-                    rows["end"].append(end)
-                    rows["surface"].append(surface)
-            yield pd.DataFrame(rows)
-
-    laid_out = conv.select("conv_id", "turn_idx", "text").repartition(
-        n_partitions, "conv_id"
-    ).sortWithinPartitions("conv_id", "turn_idx")
-    return laid_out.mapInPandas(
-        run, schema="conv_id string, turn_idx int, begin int, end int, surface string"
-    )
+    return _turn_layout(conv, n_partitions).mapInPandas(run, schema=TRIPLES_SCHEMA)

@@ -16,10 +16,11 @@ linked-mention rows with the KB kept DISTRIBUTED end to end:
 3. expand candidate ngrams JVM-side (``transform``/``slice``) and
    equi-join them against the per-label sense table (sort-merge at
    scale — uniform string keys, AQE handles residual skew);
-4. re-group matched spans per turn and resolve the greedy
-   longest-match-first non-overlap rule + candidate scoring in one
-   Arrow kernel, reusing the EXACT spec/_score_senses primitives the
-   broadcast path uses — parity is structural, not re-implemented.
+4. re-group the matched surfaces with their senses per conversation
+   row (ROW_KEY) and run the broadcast path's own kernel
+   (linking._link_rows: spec's greedy parse + the batch scorer) on
+   each row's text against the Arrow batch's gazetteer subset —
+   parity is structural, not re-implemented.
 
 Entity context vectors are computed distributed too (mapInPandas over
 the entities table) and ride the sense table as float32 arrays, so no
@@ -89,34 +90,36 @@ def entity_vectors_table(entities: DataFrame, wvec_bc=None) -> DataFrame:
     )
 
 
-def _candidate_spans(conv_tok: DataFrame, idx: DataFrame) -> DataFrame:
-    """Token positions that can start a surface (join vs the index),
-    expanded into candidate (begin, end, surface) ngrams JVM-side.
-    The F6 apostrophe rule and the MAX_LABEL_CHARS guard apply here,
-    exactly where detect_mentions applies them."""
-    positions = conv_tok.select(
-        "conv_id",
-        "turn_idx",
-        F.posexplode("tokens").alias("pos", "tok"),
-    ).select(
-        "conv_id", "turn_idx", "pos", F.lower("tok").alias("first_tok")
-    )
+# Row identity for the per-row joins: (conv_id, turn_idx) need not be
+# unique, so rows also key on a hash of their text — derived from
+# content, it is the same on every recompute of the frame, unlike
+# monotonically_increasing_id after a shuffle. Rows that share all
+# three columns share their text (barring a 64-bit hash collision) and
+# link identically.
+ROW_KEY = ["conv_id", "turn_idx", "text_hash"]
+
+
+def _candidate_surfaces(rows_tok: DataFrame, idx: DataFrame) -> DataFrame:
+    """(ROW_KEY, surface) for every ngram of a row that starts at a
+    token able to start a surface (join vs the index) and is at most
+    that token's max_len long — expanded JVM-side. A superset of the
+    row's gazetteer matches; the kernel's spec parse picks among
+    them."""
+    positions = rows_tok.select(
+        *ROW_KEY, F.posexplode("tokens").alias("pos", "tok")
+    ).select(*ROW_KEY, "pos", F.lower("tok").alias("first_tok"))
     starts = (
         positions.join(idx, "first_tok")
-        .groupBy("conv_id", "turn_idx")
+        .groupBy(*ROW_KEY)
         .agg(F.collect_list(F.struct("pos", "max_len")).alias("starts"))
     )
-    with_tokens = conv_tok.join(starts, ["conv_id", "turn_idx"])
-    expanded = with_tokens.select(
-        "conv_id",
-        "turn_idx",
-        "tokens",
-        F.explode("starts").alias("s"),
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "tokens",
-        F.col("s.pos").alias("pos"),
+    expanded = rows_tok.join(starts, ROW_KEY).select(
+        *ROW_KEY, "tokens", F.explode("starts").alias("s")
+    )
+    # a start past the row's end can only come from another text under
+    # the same key (a hash collision); dropping it keeps slice in range
+    return expanded.filter(F.col("s.pos") < F.size("tokens")).select(
+        *ROW_KEY,
         F.explode(
             F.transform(
                 F.sequence(
@@ -127,37 +130,38 @@ def _candidate_spans(conv_tok: DataFrame, idx: DataFrame) -> DataFrame:
                         F.size("tokens") - F.col("s.pos"),
                     ),
                 ),
-                lambda ln: F.struct(
-                    ln.alias("ln"),
-                    _ngram_key_sql(
-                        F.concat_ws(
-                            " ", F.slice("tokens", F.col("s.pos") + 1, ln)
-                        )
-                    ).alias("surface"),
+                lambda ln: _ngram_key_sql(
+                    F.concat_ws(" ", F.slice("tokens", F.col("s.pos") + 1, ln))
                 ),
             )
-        ).alias("g"),
+        ).alias("surface"),
     )
-    prev_tok = F.element_at("tokens", F.col("pos"))  # 1-based: pos-1 (0-based)
-    this_tok = F.element_at("tokens", F.col("pos") + 1)
-    # element_at index 0 is invalid in Spark — guard the pos==0 case
-    # with when() so the access can never be evaluated, rather than
-    # relying on And short-circuit order surviving predicate rewrites
-    prev_ends_apos = F.when(
-        F.col("pos") > 0, prev_tok.endswith("'")
-    ).otherwise(F.lit(False))
-    return expanded.select(
-        "conv_id",
-        "turn_idx",
-        F.col("pos").alias("begin"),
-        (F.col("pos") + F.col("g.ln")).alias("end"),
-        F.col("g.surface").alias("surface"),
-        (
-            (F.col("g.ln") == 1)
-            & (F.length(this_tok) == 1)
-            & prev_ends_apos
-        ).alias("apos_skip"),
-    ).filter(~F.col("apos_skip") & (F.length("surface") < spec.MAX_LABEL_CHARS))
+
+
+def _batch_kb(cands_by_row, with_vectors: bool):
+    """The per-batch gazetteer {surface: ordered senses} and entity
+    vectors {entity_id: float32 vector} of the rows' joined candidates.
+    Every surface is a full-gazetteer surface and every gazetteer
+    ngram of a row is among its candidates (the JVM tokens and first-
+    token case folding are spec's), so spec's parse of the row's own
+    tokens against this subset finds exactly the mentions it finds
+    against the full gazetteer."""
+    gaz: dict = {}
+    evecs: dict = {}
+    for cands in cands_by_row:
+        for c in cands:
+            surface = c["surface"]
+            if surface in gaz:
+                continue
+            senses = c["senses"]
+            gaz[surface] = spec.order_senses(
+                [(int(s["entity_id"]), int(s["link_occ"]), int(s["link_doc"]))
+                 for s in senses]
+            )
+            if with_vectors:
+                for s in senses:
+                    evecs[int(s["entity_id"])] = np.asarray(s["vec"], dtype=np.float32)
+    return gaz, evecs
 
 
 def link_mentions_shuffle(
@@ -169,8 +173,8 @@ def link_mentions_shuffle(
 ) -> DataFrame:
     """conversations → linked mentions, KB distributed (no broadcast
     dict, no driver collect). Row-identical to
-    ``linking.link_mentions`` over the same KB (parity test:
-    tests/test_linking_shuffle.py)."""
+    ``linking.link_mentions`` over the same KB on any input (parity
+    tests: tests/test_linking_shuffle.py)."""
     if score_mode not in spec.SCORE_MODES:
         raise ValueError(f"unknown score_mode {score_mode!r} (see spec.SCORE_MODES)")
     spark = conv.sparkSession
@@ -206,94 +210,37 @@ def link_mentions_shuffle(
         F.collect_list(sense_struct).alias("senses")
     )
 
-    conv_tok = conv.repartition(n_partitions, "conv_id").select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "tool",
+    rows = conv.select(
+        "conv_id", "turn_idx", "role", "tool", "text",
+        F.xxhash64("text").alias("text_hash"),
+    ).repartition(n_partitions, "conv_id")
+    rows_tok = rows.select(
+        *ROW_KEY,
         F.regexp_extract_all(
             F.coalesce("text", F.lit("")), F.lit(spec.BOUNDARY_PATTERN), 0
         ).alias("tokens"),
     )
-
-    cands = _candidate_spans(conv_tok, first_token_index_table(labels))
-    matched = cands.join(senses, cands.surface == senses.label).select(
-        "conv_id", "turn_idx", "begin", "end", "surface", "senses"
+    cands = _candidate_surfaces(rows_tok, first_token_index_table(labels))
+    cands_per_row = (
+        cands.join(senses, cands.surface == senses.label)
+        .groupBy(*ROW_KEY)
+        .agg(F.collect_list(F.struct("surface", "senses")).alias("cands"))
     )
-    spans_per_turn = matched.groupBy("conv_id", "turn_idx").agg(
-        F.collect_list(F.struct("begin", "end", "surface", "senses")).alias(
-            "spans"
-        )
+    row_frame = rows.join(cands_per_row, ROW_KEY).select(
+        "conv_id", "turn_idx", "role", "tool", "text", "cands"
     )
-    turn_frame = conv_tok.join(spans_per_turn, ["conv_id", "turn_idx"])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         vec_fn = spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else None
         for pdf in batches:
-            out: dict[str, list] = {
-                "conv_id": [], "turn_idx": [], "role": [], "tool": [],
-                "begin": [], "end": [], "surface": [], "entity_id": [],
-                "score": [],
-            }
-            # bare column lists, not itertuples (the r8 kernel rule:
-            # row tuples materialize every cell per row)
-            for r_conv, r_turn, r_role, r_tool, r_tokens, r_spans in zip(
-                pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(),
-                pdf["role"].tolist(), pdf["tool"].tolist(),
-                pdf["tokens"].tolist(), pdf["spans"].tolist(),
-            ):
-                tokens = list(r_tokens)
-                by_begin: dict[int, dict] = {}
-                for sp in r_spans:
-                    cur = by_begin.get(sp["begin"])
-                    if cur is None or sp["end"] > cur["end"]:
-                        by_begin[sp["begin"]] = sp
-                # greedy longest-match-first, left to right — the same
-                # region rule as spec.detect_mentions (Util.java:39-76)
-                picked_spans = []
-                i, n = 0, len(tokens)
-                while i < n:
-                    sp = by_begin.get(i)
-                    if sp is not None:
-                        picked_spans.append(sp)
-                        i = sp["end"]
-                    else:
-                        i += 1
-                ctx_cache: dict = {}
-                for sp in picked_spans:
-                    senses_l = [
-                        (int(s["entity_id"]), int(s["link_occ"]), int(s["link_doc"]))
-                        for s in sp["senses"]
-                    ]
-                    evecs_l = (
-                        {
-                            int(s["entity_id"]): np.asarray(
-                                s["vec"], dtype=np.float32
-                            )
-                            for s in sp["senses"]
-                        }
-                        if score_mode != "prior"
-                        else {}
-                    )
-                    cands_scored = linking._score_senses(
-                        senses_l, tokens, sp["begin"], sp["end"], evecs_l,
-                        score_mode, ctx_cache, vec_fn,
-                    )
-                    p = spec.pick_sense(cands_scored)
-                    if p is None:
-                        continue
-                    out["conv_id"].append(r_conv)
-                    out["turn_idx"].append(r_turn)
-                    out["role"].append(r_role)
-                    out["tool"].append(r_tool)
-                    out["begin"].append(sp["begin"])
-                    out["end"].append(sp["end"])
-                    out["surface"].append(sp["surface"])
-                    out["entity_id"].append(p[0])
-                    out["score"].append(p[1])
-            yield pd.DataFrame(out)
+            gaz, evecs = _batch_kb(pdf["cands"].tolist(), score_mode != "prior")
+            picked_by_row = linking._link_rows(
+                pdf["text"].tolist(), gaz, evecs,
+                spec.build_first_token_index(gaz), score_mode, vec_fn, None,
+            )
+            yield linking._linked_frame(pdf, picked_by_row)
 
-    return turn_frame.mapInPandas(run, schema=LINKED_SCHEMA)
+    return row_frame.mapInPandas(run, schema=LINKED_SCHEMA)
 
 
 def link_mentions_adaptive(

@@ -114,6 +114,10 @@ def run_oracle(
     evecs = entity_vectors(kb, vec_fn)
 
     conv_sorted = conversations.sort_values(["conv_id", "turn_idx"], kind="mergesort")
+    dup = conv_sorted.duplicated(["conv_id", "turn_idx"])
+    if dup.any():
+        first = conv_sorted[dup].iloc[0]
+        raise spec.duplicate_key_error(first.conv_id, first.turn_idx)
 
     mentions_rows = []
     linked_rows = []
@@ -125,11 +129,13 @@ def run_oracle(
     link_occ: dict[tuple[str, int], int] = defaultdict(int)
     link_doc_sets: dict[tuple[str, int], set[str]] = defaultdict(set)
 
-    prev_conv = None
+    prev_key = None
     prev_set: set[int] = set()
     for row in conv_sorted.itertuples(index=False):
-        if row.conv_id != prev_conv:
-            prev_conv, prev_set = row.conv_id, set()
+        # the window reaches back to the LITERAL turn t-1 only
+        if prev_key != (row.conv_id, row.turn_idx - 1):
+            prev_set = set()
+        prev_key = (row.conv_id, row.turn_idx)
         tokens = spec.tokenize(row.text or "")
         found = spec.detect_mentions(tokens, gaz, idx)
         cur_set: set[int] = set()
@@ -170,7 +176,7 @@ def run_oracle(
             link_doc_sets[(surface, eid)].add(row.conv_id)
             cur_set.add(ceid)
 
-        # triples for this turn (window = prev turn ∪ current turn)
+        # triples for this turn (window = turn t-1 ∪ turn t)
         for e in sorted(cur_set):
             triples.add((row.conv_id, int(row.turn_idx), e, "mentioned_by", row.role))
             if row.tool is not None and not (

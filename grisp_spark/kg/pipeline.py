@@ -30,6 +30,7 @@ from grisp_spark.kg import (
     linking,
     linking_shuffle,
     materialize,
+    spec,
     stats,
     triples as triples_mod,
 )
@@ -157,6 +158,7 @@ class KGPipeline:
             conv = self.conversations().withColumn(
                 "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets))
             )
+            rows_in = self._count_unique_turns(conv, todo)
             kb = self.kb()
             # adaptive plan choice, decided ONCE for the whole stage
             # (mirrors linking_shuffle.link_mentions_adaptive — the
@@ -172,7 +174,6 @@ class KGPipeline:
             for b in todo:
                 t0 = time.monotonic()
                 part = conv.filter(F.col("bucket") == b).drop("bucket")
-                rows_in = part.count()
                 if use_broadcast:
                     linked_b = linking.link_mentions(
                         part, gaz_bc, evec_bc, self.n_partitions
@@ -210,7 +211,7 @@ class KGPipeline:
                 )
                 rows_out = sum(int(r["n"]) for r in m)
                 self.lineage.record(
-                    stage, b, rows_in, rows_out,
+                    stage, b, rows_in.get(b, 0), rows_out,
                     int((time.monotonic() - t0) * 1000),
                     conv_id_range=[
                         min((r["cmin"] for r in m), default=None),
@@ -219,6 +220,29 @@ class KGPipeline:
                     score_histogram={str(r["decile"]): int(r["n"]) for r in m},
                 )
         return self._read_linked(out)
+
+    @staticmethod
+    def _count_unique_turns(conv: DataFrame, buckets: list[int]) -> dict[int, int]:
+        """{bucket: row count} of ``buckets`` from ONE aggregation job,
+        which also checks spec's row key: a (conv_id, turn_idx) held by
+        more than one row raises spec.duplicate_key_error naming it,
+        before any bucket is linked."""
+        per_bucket = (
+            conv.filter(F.col("bucket").isin(buckets))
+            .groupBy("bucket", "conv_id", "turn_idx")
+            .agg(F.count("*").alias("n"))
+            .groupBy("bucket")
+            .agg(
+                F.sum("n").alias("rows"),
+                F.max_by(F.struct("conv_id", "turn_idx"), "n").alias("top"),
+                F.max("n").alias("top_n"),
+            )
+            .collect()
+        )
+        for r in per_bucket:
+            if r["top_n"] > 1:
+                raise spec.duplicate_key_error(*r["top"])
+        return {r["bucket"]: int(r["rows"]) for r in per_bucket}
 
     # -- downstream stages (stage-granular resume) --------------------------
     def _stage(

@@ -10,8 +10,8 @@ identical to the reference's count-1-per-doc-then-sum because
 detection pre-aggregates per conversation.
 
 Partial aggregation (the reference's combiner-as-reducer) is Spark's
-default hash-agg; hot labels (the skew guard motivating grisp's row
-caps) are handled by the two-phase salted variant below."""
+default hash-agg plus AQE's skew handling; the explicit two-phase
+salted aggregation for hot keys is queries_relational2.q16_salted_stats."""
 
 from __future__ import annotations
 
@@ -78,65 +78,3 @@ def sanity_violations(label_stats: DataFrame) -> DataFrame:
         F.sum("link_occ").alias("sum_link_occ")
     )
     return per_label.filter(F.col("sum_link_occ") > F.col("text_occ"))
-
-
-def label_stats_from_kb(entities: DataFrame, aliases: DataFrame) -> DataFrame:
-    """Bootstrap an anchor-prior table from a bare KB (no corpus
-    statistics yet) — grisp's step-1 equivalent, where the gazetteer
-    initially knows only titles and redirects (PageStep.java:146-187,
-    RedirectStep.java:159-181). Uniform unit priors; from_title /
-    from_redirect flags preserved so sense ordering still has the
-    reference's tie-break structure (ExSenseForLabel.java:12-13)."""
-    from grisp_spark.kg.spec import MAX_LABEL_CHARS
-
-    title_rows = entities.select(
-        F.col("canonical_name").alias("label"),
-        "entity_id",
-        F.lit(1).cast("long").alias("link_occ"),
-        F.lit(1).cast("long").alias("link_doc"),
-        F.lit(True).alias("from_title"),
-        F.lit(False).alias("from_redirect"),
-    )
-    alias_rows = aliases.select(
-        F.col("alias").alias("label"),
-        "entity_id",
-        F.lit(1).cast("long").alias("link_occ"),
-        F.lit(1).cast("long").alias("link_doc"),
-        F.lit(False).alias("from_title"),
-        (F.col("kind") == "redirect").alias("from_redirect"),
-    )
-    return (
-        title_rows.unionByName(alias_rows)
-        .filter(F.length("label") < MAX_LABEL_CHARS)
-        .groupBy("label", "entity_id")
-        .agg(
-            F.sum("link_occ").alias("link_occ"),
-            F.max("link_doc").alias("link_doc"),
-            F.max("from_title").alias("from_title"),
-            F.max("from_redirect").alias("from_redirect"),
-        )
-    )
-
-
-def salted_label_stats(
-    mentions: DataFrame, n_salts: int = 16
-) -> DataFrame:
-    """Two-phase salted aggregation for hot labels (the skew driver:
-    one entity in >30% of turns). Phase 1 aggregates (label, salt)
-    partials; phase 2 merges the ≤n_salts partials per label. Exact
-    counts for occ; doc counts stay exact because phase 1 collects
-    per-salt distinct conv sets only within the salt — so doc counts
-    use approx-union via count_distinct over (salt-partitioned) convs:
-    a conv hashes to one salt deterministically, making partial
-    distinct counts disjoint and their sum exact."""
-    salted = mentions.withColumn(
-        "salt", F.pmod(F.xxhash64("conv_id"), F.lit(n_salts))
-    )
-    phase1 = salted.groupBy("surface", "salt").agg(
-        F.count("*").alias("occ_part"),
-        F.countDistinct("conv_id").alias("doc_part"),
-    )
-    return phase1.groupBy("surface").agg(
-        F.sum("occ_part").alias("text_occ"),
-        F.sum("doc_part").alias("text_doc"),
-    )

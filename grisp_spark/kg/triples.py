@@ -10,15 +10,23 @@ transcripts:
   W_t = E_{t-1} ∪ E_t, emitted at turn t iff at least one side is in
   E_t (so a pair fully inside E_{t-1} was already emitted at t-1)
 
+The window is spec's turn-window rule (literal turn t-1, a reset at a
+turn_idx gap) evaluated in SQL; spec.window_triples is the same rule
+for the Arrow kernels. (conv_id, turn_idx) must be a row key of the
+conversations (KGPipeline.stage_linked checks it): the per-turn
+groupBy below would merge two rows under one key.
+
 All JVM-side: collect_set per turn, lag window, double explode — no
 Python in this stage, and no redundant work:
 
 - turns with no linked mentions emit nothing and contribute an empty
   E_{t-1}, so the stage runs on linked mentions alone — the previous
   design joined a distinct()-ed spine of ALL conversations (a full
-  shuffle of the corpus) just to model empty turns; a turn-continuity
-  check on the lag (prev row must be turn_idx−1) gives identical
-  semantics for free.
+  shuffle of the corpus) just to model empty turns. The lag over
+  linked turns only sees the previous turn WITH mentions, so the
+  window takes its entities only when that turn is turn_idx−1: a
+  linked turn t-1 contributes E_{t-1}, and a turn t-1 without
+  mentions or a gap contributes the same empty set.
 - every branch emits rows unique by construction (ents are sets; the
   window array is a sorted set; preds are disjoint across branches),
   so there is NO final distinct() — that was an 11s full-output

@@ -358,8 +358,10 @@ def topk_ivf(
     tests/test_similarity_recall.py)."""
     if centroids == "kmeans":
         trained = kmeans_centroids(emb, n_cells)
+        # a pandas frame: Arrow LocalTableScan, no pickle-mode workers
         cents = emb.sparkSession.createDataFrame(
-            trained, "cid long, c_emb array<double>"
+            pd.DataFrame(trained, columns=["cid", "c_emb"]),
+            "cid long, c_emb array<double>",
         ).select("cid", "c_emb", norm(F.col("c_emb"), dim).alias("c_norm"))
     elif centroids == "head":
         cents = emb.filter(F.col("vec_id") < n_cells).select(

@@ -633,8 +633,10 @@ def _staged_triples(
         df.write.mode("overwrite").parquet(os.path.join(data_dir, f"{name}.parquet"))
     # the bootstrap KB has no alias table; the pipeline contract reads
     # one, so stage an empty frame with the datagen schema
+    # (a pandas frame: Arrow LocalTableScan, no pickle-mode workers)
     spark.createDataFrame(
-        [], "alias string, entity_id long, kind string, chain_hops int"
+        pd.DataFrame(columns=["alias", "entity_id", "kind", "chain_hops"]),
+        "alias string, entity_id long, kind string, chain_hops int",
     ).write.mode("overwrite").parquet(os.path.join(data_dir, "aliases.parquet"))
     result = KGPipeline(
         spark, data_dir, out_dir, n_buckets=4, **pipeline_kwargs

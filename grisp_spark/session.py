@@ -74,19 +74,9 @@ def get_spark(
 # one constant initcap at session build so the load happens once, off
 # every query's timed path. Local mode shares one JVM between driver
 # and executors, so this covers both; on a real cluster each long-lived
-# executor JVM pays the load once, amortized over the job.
-_COLLATION_WARMED = False
-
-
+# executor JVM pays the load once, amortized over the job. It runs on
+# every get_spark call (a trivial query once the JVM is warm) rather
+# than once per Python process, so a JVM restarted within the process
+# is warmed too.
 def _warm_collation_support(spark: SparkSession) -> None:
-    global _COLLATION_WARMED
-    if _COLLATION_WARMED:
-        return
     spark.sql("SELECT initcap('warm')").collect()
-    _COLLATION_WARMED = True
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -3,10 +3,13 @@ triple extraction with applyInPandasWithState.
 
 The batch pipeline's 2-turn window becomes keyed streaming state: for
 each conv_id, the state holds (last turn_idx, last entity set), so
-triples emit incrementally as turns arrive — the Structured-Streaming
-twin of the fused map-side batch path (linking.link_and_extract),
-sharing the same spec primitives. State times out after idle_minutes
-of event time past the watermark."""
+triples emit incrementally as turns arrive. Each group invocation runs
+the fused batch kernel's own steps (linking.link_and_extract):
+linking._link_rows links the turns, and linking._triples_frame emits
+them under spec's turn-window rule (spec.window_triples) with the
+state as the window carry — a turn that does not follow the stored
+last turn starts a new window, and a repeat of the stored last turn
+raises spec's duplicate_key_error."""
 
 from __future__ import annotations
 
@@ -15,22 +18,21 @@ from collections.abc import Iterable, Iterator
 import pandas as pd
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from grisp_spark.kg import spec
+from grisp_spark.kg import linking, spec
 
-OUTPUT_SCHEMA = "conv_id string, turn_idx int, subj long, pred string, obj string"
+OUTPUT_SCHEMA = linking.TRIPLES_SCHEMA
 STATE_SCHEMA = "last_turn int, ents array<long>"
 
 
 def make_processor(gaz_bc, evec_bc, canon_bc):
     """Returns the applyInPandasWithState function closed over the
     broadcast KB structures."""
-    from grisp_spark.kg.linking import _cached_word_vec, _first_token_index
-
-    # driver-side stable broadcast id — the executor-local index cache
-    # key (process() is invoked once PER CONVERSATION GROUP per
-    # micro-batch; rebuilding the first-token index each time would
-    # scan the whole gazetteer per group)
+    # driver-side stable broadcast ids — the executor-local index and
+    # vector-pack cache keys (process() is invoked once PER
+    # CONVERSATION GROUP per micro-batch; rebuilding either each time
+    # would scan the whole KB per group)
     cache_key = gaz_bc._jbroadcast.id()
+    evec_key = evec_bc._jbroadcast.id()
 
     def process(
         key: tuple,
@@ -38,72 +40,31 @@ def make_processor(gaz_bc, evec_bc, canon_bc):
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         gaz = gaz_bc.value
-        evecs = evec_bc.value
-        canon = canon_bc.value
-        idx = _first_token_index(gaz, cache_key)
         (conv_id,) = key
-        if state.exists:
-            last_turn, prev_list = state.get
-            prev_set = set(prev_list)
-        else:
-            last_turn, prev_set = -1, set()
-
         batches = list(pdfs)
         if not batches:  # timeout-only invocation: nothing to emit
             yield pd.DataFrame(
                 {"conv_id": [], "turn_idx": [], "subj": [], "pred": [], "obj": []}
             )
             return
-        rows = pd.concat(batches, ignore_index=True).sort_values("turn_idx")
-        out = {"conv_id": [], "turn_idx": [], "subj": [], "pred": [], "obj": []}
-
-        def emit(turn_idx, subj, pred, obj):
-            out["conv_id"].append(conv_id)
-            out["turn_idx"].append(turn_idx)
-            out["subj"].append(subj)
-            out["pred"].append(pred)
-            out["obj"].append(obj)
-
-        for row in rows.itertuples(index=False):
-            if row.turn_idx != last_turn + 1:
-                prev_set = set()  # gap: window resets (late/ooo turn)
-            tokens = spec.tokenize(row.text or "")
-            cur: set[int] = set()
-            for begin, end, surface in spec.detect_mentions(tokens, gaz, idx):
-                senses = gaz[surface]
-                total = sum(s[1] for s in senses)
-                # executor word-vector cache: uncached spec.word_vec
-                # re-derives the RNG vector per context word (~10x)
-                ctx = spec.centroid(tokens[:begin] + tokens[end:], _cached_word_vec)
-                picked = spec.pick_sense(
-                    [
-                        (
-                            eid,
-                            spec.score_candidate(
-                                occ / total if total else 0.0,
-                                spec.cosine(ctx, spec.entity_vec(evecs, eid)),
-                            ),
-                        )
-                        for eid, occ, _doc in senses
-                    ]
-                )
-                if picked is not None:
-                    cur.add(canon.get(picked[0], picked[0]))
-            tool = None if (row.tool is None or row.tool != row.tool) else row.tool
-            for e in sorted(cur):
-                emit(row.turn_idx, e, "mentioned_by", row.role)
-                if tool is not None:
-                    emit(row.turn_idx, e, "used_with_tool", tool)
-            window = sorted(prev_set | cur)
-            for i, a in enumerate(window):
-                for b in window[i + 1 :]:
-                    if a in cur or b in cur:
-                        emit(row.turn_idx, a, "co_occurs_with", str(b))
-            prev_set = cur
-            last_turn = int(row.turn_idx)
-
-        state.update((last_turn, sorted(prev_set)))
-        yield pd.DataFrame(out)
+        rows = pd.concat(batches, ignore_index=True).sort_values(
+            "turn_idx", kind="stable"
+        )
+        if state.exists:
+            last_turn, ents = state.get
+            carry = (conv_id, last_turn, set(ents))
+        else:
+            carry = spec.NO_TURN
+        picked_by_row = linking._link_rows(
+            rows["text"].tolist(), gaz, evec_bc.value,
+            linking._first_token_index(gaz, cache_key), "centroid", None,
+            evec_key,
+        )
+        triples, (_, last_turn, ents) = linking._triples_frame(
+            rows, picked_by_row, canon_bc.value.get, carry
+        )
+        state.update((int(last_turn), sorted(ents)))
+        yield triples
 
     return process
 

@@ -56,15 +56,21 @@ def test_triples_pr_gate(pipeline_result, oracle_result):
 
 
 def test_mention_parity(spark, dataset, oracle_result):
-    import pandas as pd
-
+    """Detected spans vs the oracle's: every gazetteer surface has at
+    least one sense, so the spans link_mentions links ARE the spans
+    detection finds."""
     kb_df = {
         n: spark.read.parquet(os.path.join(dataset, f"{n}.parquet"))
         for n in ("entities", "aliases", "label_stats")
     }
     conv = spark.read.parquet(os.path.join(dataset, "conversations.parquet"))
-    gaz_bc, _ = linking.build_broadcasts(spark, kb_df)
-    got = linking.detect_only(conv, gaz_bc, 8).toPandas()
+    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb_df)
+    assert all(gaz_bc.value.values())
+    got = (
+        linking.link_mentions(conv, gaz_bc, evec_bc, 8)
+        .select("conv_id", "turn_idx", "begin", "end", "surface")
+        .toPandas()
+    )
     got_set = {
         (r.conv_id, int(r.turn_idx), int(r.begin), int(r.end), r.surface)
         for r in got.itertuples(index=False)

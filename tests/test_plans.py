@@ -209,3 +209,20 @@ def test_driver_graph_paths_build_local_relations(spark):
     plan = _plan(comps)
     assert "LocalTableScan" in plan, plan
     assert "ExistingRDD" not in plan, plan
+
+
+def test_ivf_kmeans_centroids_build_local_relation(spark):
+    """The trained k-means centroids enter the plan as an Arrow-built
+    LocalTableScan, not a PythonRDD (the pickle-worker spawn storm of
+    test_driver_graph_paths_build_local_relations)."""
+    from grisp_spark.operators.similarity import topk_ivf
+
+    emb = spark.range(40).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin((F.col("id") + 1) * (d + 1)) for d in range(8)]).alias("embedding"),
+    )
+    df = topk_ivf(emb, n_queries=2, k=3, dim=8, n_cells=2, centroids="kmeans")
+    assert df.count() > 0
+    plan = _plan(df)
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan

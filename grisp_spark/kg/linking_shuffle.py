@@ -47,8 +47,9 @@ from grisp_spark.kg import linking, spec
 from grisp_spark.kg.linking import LINKED_SCHEMA
 
 # above this many labels the broadcast dict stops being the right
-# plan (~1-2 GB of python dict); link_mentions_adaptive flips to the
-# shuffle path
+# plan (~1-2 GB of python dict); link_mentions_adaptive, the staged
+# pipeline's linker, flips to the shuffle path (KGPipeline's
+# broadcast_label_limit defaults to this)
 BROADCAST_LABEL_LIMIT = 5_000_000
 
 

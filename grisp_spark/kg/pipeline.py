@@ -3,13 +3,14 @@ checkpoints and resume-from-partition.
 
 The reference's resume is stage-ordinal granularity
 (tempProgress.csv, DumpExtractor.java:214-250,515-537); the north
-rule requires per-partition resume. Here every stage writes parquet
-partitioned by a conv_id hash bucket plus a lineage sidecar
-(stage, bucket, rows_in, rows_out, wall_ms); on resume, buckets with
-lineage rows are skipped and only missing buckets recompute. The
-expensive Arrow linking stage is bucket-resumable; downstream
-shuffle stages are cheap relative to it and resume at stage
-granularity (whole-stage skip when complete).
+rule requires per-partition resume. Here the expensive Arrow linking
+stage writes parquet partitioned by a conv_id hash bucket plus one
+lineage record per bucket (rows_in, rows_out, wall_ms, conv_id range,
+link-score histogram). On resume, buckets with a record and output on
+disk are skipped; the missing ones are linked together in one pass
+and one dynamic-overwrite write, which commits all of them or none.
+Downstream shuffle stages are cheap relative to it and resume at
+stage granularity (whole-stage skip when complete).
 
 Run via spark-submit --py-files grisp_spark.zip as
 ``python -m grisp_spark.kg.pipeline <data_dir> <out_dir>``."""
@@ -129,8 +130,8 @@ class KGPipeline:
     LINKED_READ_SCHEMA = linking.LINKED_SCHEMA + ", bucket int"
 
     def _read_linked(self, out: str) -> DataFrame:
-        # explicit schema: a bucket with zero mentions writes a
-        # schema-less (empty) parquet dir, which breaks inference
+        # explicit schema: a pass that links no mention writes no
+        # parquet footer, which breaks inference
         return self.spark.read.schema(self.LINKED_READ_SCHEMA).parquet(out)
 
     def stage_linked(self, resume: bool = True) -> DataFrame:
@@ -154,71 +155,58 @@ class KGPipeline:
                 if fn.startswith(f"{stage}."):
                     os.remove(os.path.join(self.lineage.dir, fn))
         todo = [b for b in range(self.n_buckets) if b not in done]
-        if todo:
-            conv = self.conversations().withColumn(
-                "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets))
+        if not todo:
+            return self._read_linked(out)
+        t0 = time.monotonic()
+        bucket = F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast("int")
+        conv = self.conversations().withColumn("bucket", bucket)
+        rows_in = self._count_unique_turns(conv, todo)
+        # ONE linking pass over every missing bucket; the adaptive
+        # linker picks broadcast dict vs shuffle joins by gazetteer
+        # size (tests/test_kg_pipeline.py::test_pipeline_shuffle_regime)
+        linked = linking_shuffle.link_mentions_adaptive(
+            conv.filter(F.col("bucket").isin(todo)).drop("bucket"),
+            self.kb(),
+            self.n_partitions,
+            broadcast_label_limit=self.broadcast_label_limit,
+        )
+        # ONE write, dynamic partition overwrite: it replaces only the
+        # bucket partitions it writes, and commits all of them or none,
+        # so a bucket left on disk without a lineage record (crash
+        # after the write) is rewritten on resume, not double-appended
+        (
+            linked.withColumn("bucket", bucket)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("bucket")
+            .parquet(out)
+        )
+        # per-bucket lineage metrics in ONE aggregation job over the
+        # todo partitions: row count, conv_id range, link-score decile
+        # histogram (north-star lineage: "conv_id range, input/output
+        # counts, link-score histograms")
+        m = (
+            self._read_linked(out)
+            .filter(F.col("bucket").isin(todo))
+            .groupBy("bucket", F.floor(F.col("score") * 10).cast("int").alias("decile"))
+            .agg(
+                F.count("*").alias("n"),
+                F.min("conv_id").alias("cmin"),
+                F.max("conv_id").alias("cmax"),
             )
-            rows_in = self._count_unique_turns(conv, todo)
-            kb = self.kb()
-            # adaptive plan choice, decided ONCE for the whole stage
-            # (mirrors linking_shuffle.link_mentions_adaptive — the
-            # 64M-label regime of util/LabelCache.java:46): while the
-            # gazetteer fits executor memory, collect it to a broadcast
-            # dict and link map-side; past the limit, never collect —
-            # every bucket goes through the distributed shuffle-join
-            # plan instead. Parity across regimes is pinned by
-            # tests/test_kg_pipeline.py::test_pipeline_shuffle_regime.
-            use_broadcast = kb["label_stats"].count() <= self.broadcast_label_limit
-            if use_broadcast:
-                gaz_bc, evec_bc = linking.build_broadcasts(self.spark, kb)
-            for b in todo:
-                t0 = time.monotonic()
-                part = conv.filter(F.col("bucket") == b).drop("bucket")
-                if use_broadcast:
-                    linked_b = linking.link_mentions(
-                        part, gaz_bc, evec_bc, self.n_partitions
-                    )
-                else:
-                    linked_b = linking_shuffle.link_mentions_shuffle(
-                        part, kb, self.n_partitions
-                    )
-                linked_b = linked_b.withColumn("bucket", F.lit(b))
-                # dynamic partition overwrite: replaces ONLY bucket=b,
-                # so a bucket that crashed mid-write (files on disk,
-                # no lineage record) is cleanly rewritten on resume
-                # instead of double-appended
-                (
-                    linked_b.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("bucket")
-                    .parquet(out)
-                )
-                written = self._read_linked(out).filter(F.col("bucket") == b)
-                # per-bucket lineage metrics in ONE aggregation pass:
-                # row count, conv_id range, link-score decile
-                # histogram (north-star lineage: "conv_id range,
-                # input/output counts, link-score histograms")
-                hist_col = F.floor(F.col("score") * 10).cast("int")
-                m = (
-                    written.withColumn("decile", hist_col)
-                    .groupBy("decile")
-                    .agg(
-                        F.count("*").alias("n"),
-                        F.min("conv_id").alias("cmin"),
-                        F.max("conv_id").alias("cmax"),
-                    )
-                    .collect()
-                )
-                rows_out = sum(int(r["n"]) for r in m)
-                self.lineage.record(
-                    stage, b, rows_in.get(b, 0), rows_out,
-                    int((time.monotonic() - t0) * 1000),
-                    conv_id_range=[
-                        min((r["cmin"] for r in m), default=None),
-                        max((r["cmax"] for r in m), default=None),
-                    ],
-                    score_histogram={str(r["decile"]): int(r["n"]) for r in m},
-                )
+            .collect()
+        )
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        for b in todo:
+            mb = [r for r in m if r["bucket"] == b]
+            self.lineage.record(
+                stage, b, rows_in.get(b, 0), sum(int(r["n"]) for r in mb), wall_ms,
+                conv_id_range=[
+                    min((r["cmin"] for r in mb), default=None),
+                    max((r["cmax"] for r in mb), default=None),
+                ],
+                score_histogram={str(r["decile"]): int(r["n"]) for r in mb},
+            )
         return self._read_linked(out)
 
     @staticmethod

@@ -154,88 +154,6 @@ def bfs_depth(
 DRIVER_CC_THRESHOLD = 2_000_000
 
 
-def _canon_edges(df: DataFrame) -> DataFrame:
-    """Distinct high→low orientation (src > dst), self-loops dropped."""
-    return (
-        df.select(
-            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    edges: DataFrame, max_rounds: int = 50
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14):
-    converges in O(log²·) rounds regardless of graph DIAMETER, unlike
-    min-label propagation whose round count is the diameter — the
-    web-scale path for long redirect/equivalence chains.
-
-    Each round is two grouped aggregations + joins over the
-    (shrinking) edge set; at fixpoint every edge is (node, component
-    min), i.e. a star. Raises if ``max_rounds`` is exhausted before
-    the fixpoint — a non-star edge set would silently mislabel
-    components. Output contract matches connected_components: every
-    node appearing in ``edges`` (including self-loop-only nodes) gets
-    a row, isolated ones mapping to themselves."""
-    all_nodes = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    # non-eager: the count below materializes the checkpoint (one job)
-    cur = _canon_edges(edges).localCheckpoint(eager=False)
-    n_cur = cur.count()
-    converged = False
-    for _ in range(max_rounds):
-        # large-star: every node u attaches its LARGER neighbors to
-        # m = min(Γ(u) ∪ {u})
-        sym = cur.union(
-            cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        mins = sym.groupBy("src").agg(
-            F.least(F.min("dst"), F.first("src")).alias("m")
-        )
-        large = (
-            sym.join(mins, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        )
-        # small-star: on high→low edges, every node u attaches its
-        # smaller neighbors AND itself to m = min(Γ≤(u) ∪ {u})
-        hi_lo = _canon_edges(large)
-        smins = hi_lo.groupBy("src").agg(F.min("dst").alias("m"))
-        small = hi_lo.join(smins, "src").select(
-            F.col("dst").alias("src"), F.col("m").alias("dst")
-        ).union(smins.select("src", F.col("m").alias("dst")))
-        nxt = _canon_edges(small).localCheckpoint(eager=False)
-        # both sides are distinct sets: equal size + empty one-sided
-        # difference ⟹ equal (one count + one probe, not two probes);
-        # the count doubles as the checkpoint materializer
-        n_nxt = nxt.count()
-        changed = n_nxt != n_cur or nxt.exceptAll(cur).limit(1).count() > 0
-        cur, n_cur = nxt, n_nxt
-        if not changed:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_rounds} rounds"
-        )
-    # fixpoint stars: (node → component min) for every non-root node;
-    # nodes with no surviving edges (isolated / self-loop-only) map to
-    # themselves, like the union-find and propagation paths
-    roots = cur.select(F.col("dst").alias("id"), F.col("dst").alias("component"))
-    members = cur.select(F.col("src").alias("id"), F.col("dst").alias("component"))
-    stars = members.union(roots).distinct()
-    return all_nodes.join(stars, "id", "left").select(
-        "id", F.coalesce("component", "id").alias("component")
-    )
-
-
 def connected_components(
     edges: DataFrame, max_rounds: int = 20, driver_threshold: int = DRIVER_CC_THRESHOLD
 ) -> DataFrame:
@@ -248,8 +166,7 @@ def connected_components(
     union-find on the driver in one pass, the same driver-side-cache
     strategy grisp uses for redirects (DumpExtractor.java:325-344).
     Above it, iterative min-label propagation to fixpoint; rounds
-    bounded by graph diameter — for graphs whose diameter itself is
-    web-scale, use ``connected_components_star`` (O(log²·) rounds)."""
+    bounded by graph diameter."""
     if edges.limit(driver_threshold + 1).count() <= driver_threshold:
         return _driver_union_find(edges)
     sym = edges.select("src", "dst").union(

@@ -655,9 +655,9 @@ def q44_triples_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stage-granular resume machinery was pytest-only — this turns
     its evidence into a driver row). The derived corpus + bootstrap
     KB are written to a `.data/` scratch dataset exactly as a real
-    deployment would stage them, then the per-bucket Arrow linking
-    stage, lineage sidecars, dynamic-partition-overwrite writes, and
-    the canonicalize → extract stages all execute for real
+    deployment would stage them, then the bucket-partitioned Arrow
+    linking stage, lineage sidecars, the dynamic-partition-overwrite
+    write, and the canonicalize → extract stages all execute for real
     (resume=False: a fresh, deterministic run — resume identity
     itself is pinned by tests/test_kg_pipeline.py). Bit-equality with
     the fused path holds because linked-mention floats are
@@ -682,9 +682,10 @@ def q46_entity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q45_triples_staged_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q44's staged pipeline forced into its SHUFFLE-LINKING regime
-    (VERDICT r6 #4): ``broadcast_label_limit=0`` makes the adaptive
-    probe in kg/pipeline.py::stage_linked choose the distributed
-    kg/linking_shuffle plan for every bucket — the 64M-label regime of
+    (VERDICT r6 #4): ``broadcast_label_limit=0`` makes
+    kg/pipeline.py::stage_linked's linker
+    (linking_shuffle.link_mentions_adaptive) choose the distributed
+    kg/linking_shuffle plan — the 64M-label regime of
     the reference (util/LabelCache.java:46), where the gazetteer is
     never collected to the driver — and the result is checked against
     the SAME flagship hash oracle as kg06/q44. Regime parity was

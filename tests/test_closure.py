@@ -1,13 +1,6 @@
-"""Closure operators: driver fast path ≡ distributed iterative path
-≡ large-star/small-star path."""
+"""Closure operators: driver fast path ≡ distributed iterative path."""
 
-import random
-
-from grisp_spark.operators.closure import (
-    connected_components,
-    connected_components_star,
-    resolve_chains,
-)
+from grisp_spark.operators.closure import connected_components, resolve_chains
 
 
 def _edges(spark):
@@ -37,51 +30,6 @@ def test_cc_distributed_path_matches_driver(spark):
         for r in connected_components(e, driver_threshold=0).collect()
     }
     assert dist == driver
-
-
-def test_cc_star_matches_driver_on_fixture(spark):
-    """Large-star/small-star agrees with union-find on the chain/
-    cycle/self-loop fixture — identical contract, including the
-    self-loop-only node mapping to itself."""
-    e = _edges(spark)
-    driver = {(r.id, r.component) for r in connected_components(e).collect()}
-    star = {(r.id, r.component) for r in connected_components_star(e).collect()}
-    assert star == driver
-
-
-def test_cc_star_raises_when_unconverged(spark):
-    """Exhausting max_rounds before the fixpoint must raise — the
-    non-star edge set would silently mislabel components."""
-    import pytest
-
-    rows = [(i, i + 1) for i in range(300)]
-    e = spark.createDataFrame(rows, "src long, dst long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_star(e, max_rounds=1)
-
-
-def test_cc_star_long_chain_few_rounds(spark):
-    """The point of the star algorithm: a diameter-300 chain converges
-    in far fewer than 300 rounds (min-label propagation would need
-    ~diameter rounds). max_rounds=12 would time out propagation but
-    is ample for O(log²) star convergence."""
-    rows = [(i, i + 1) for i in range(300)]
-    e = spark.createDataFrame(rows, "src long, dst long")
-    got = {
-        (r.id, r.component)
-        for r in connected_components_star(e, max_rounds=12).collect()
-    }
-    assert got == {(i, 0) for i in range(301)}
-
-
-def test_cc_star_random_graph_matches_driver(spark):
-    rng = random.Random(17)
-    rows = [(rng.randrange(120), rng.randrange(120)) for _ in range(150)]
-    rows = [(a, b) for a, b in rows if a != b]
-    e = spark.createDataFrame(rows, "src long, dst long")
-    driver = {(r.id, r.component) for r in connected_components(e).collect()}
-    star = {(r.id, r.component) for r in connected_components_star(e).collect()}
-    assert star == driver
 
 
 def test_resolve_chains_terminal(spark):

@@ -180,8 +180,9 @@ def test_sanity_no_violations(pipeline_result):
 
 def test_pipeline_shuffle_regime(spark, dataset, pipeline_result):
     """The pipeline's own adaptive escape hatch (VERDICT r5 #8): with
-    broadcast_label_limit forced to 0 every bucket of stage_linked
-    must route through the distributed shuffle-join linking plan
+    broadcast_label_limit forced to 0, stage_linked's one call to
+    linking_shuffle.link_mentions_adaptive must pick the distributed
+    shuffle-join linking plan
     (linking_shuffle.link_mentions_shuffle — the 64M-label regime of
     util/LabelCache.java:46, where collecting the gazetteer to a
     broadcast dict is impossible) and still produce the IDENTICAL
@@ -446,6 +447,90 @@ def test_resume_after_midwrite_crash(spark, dataset, pipeline_result):
     )
     assert dups == 0
     assert _triples_set(result["triples"]) == baseline
+
+
+def _table_rows(df) -> list[str]:
+    """A table's rows, order-free, columns in name order."""
+    return sorted(repr(r) for r in df.select(*sorted(df.columns)).collect())
+
+
+def test_resume_after_task_failure(spark, dataset, monkeypatch):
+    """A Spark task that really fails while relinking lost buckets
+    commits none of them and records no lineage for them; once the
+    fault is gone, resume relinks exactly those buckets and every
+    output table equals the fresh run's."""
+    import shutil
+
+    from pyspark.errors import SparkRuntimeException
+    from pyspark.sql import functions as F
+
+    from grisp_spark.kg import linking_shuffle
+
+    out = OUT + "_task_failure"
+    shutil.rmtree(out, ignore_errors=True)
+    pipe = KGPipeline(spark, dataset, out, n_buckets=4, n_partitions=8)
+    fresh = {k: _table_rows(df) for k, df in pipe.run(resume=False).items()}
+    victim = (
+        spark.read.parquet(os.path.join(out, "linked"))
+        .filter(F.col("bucket") == 1)
+        .select("conv_id")
+        .first()["conv_id"]
+    )
+    # the state a crash while linking bucket 1 leaves: bucket 0 written
+    # but unrecorded, bucket 1 never written, no downstream stage started
+    ldir = pipe.lineage.dir
+    for fn in os.listdir(ldir):
+        if fn not in ("config.json", "linked.2.json", "linked.3.json"):
+            os.remove(os.path.join(ldir, fn))
+    for d in os.listdir(out):
+        if d not in ("linked", "_lineage"):
+            shutil.rmtree(os.path.join(out, d))
+    shutil.rmtree(os.path.join(out, "linked", "bucket=1"))
+
+    real = linking_shuffle.link_mentions_adaptive
+
+    def failing(*args, **kwargs):
+        return real(*args, **kwargs).withColumn(
+            "score",
+            F.when(
+                F.col("conv_id") == victim,
+                F.raise_error(F.lit("injected task failure")),
+            ).otherwise(F.col("score")),
+        )
+
+    monkeypatch.setattr(linking_shuffle, "link_mentions_adaptive", failing)
+    with pytest.raises(SparkRuntimeException, match="injected task failure"):
+        pipe.run(resume=True)
+    assert set(pipe.lineage.done_buckets("linked")) == {2, 3}
+
+    monkeypatch.undo()
+    result = pipe.run(resume=True)
+    assert set(pipe.lineage.done_buckets("linked")) == {0, 1, 2, 3}
+    assert {k: _table_rows(df) for k, df in result.items()} == fresh
+    shutil.rmtree(out, ignore_errors=True)
+
+
+def test_stage_linked_jobs_independent_of_bucket_count(spark, dataset):
+    """stage_linked submits no Spark work per bucket: linking 8 buckets
+    takes as many jobs as linking 2."""
+    import shutil
+
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (2, 8):
+        out = f"{OUT}_jobs{n}"
+        shutil.rmtree(out, ignore_errors=True)
+        group = f"stage_linked_{n}_buckets"
+        sc.setJobGroup(group, group)
+        try:
+            KGPipeline(
+                spark, dataset, out, n_buckets=n, n_partitions=8
+            ).stage_linked(resume=False)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        shutil.rmtree(out, ignore_errors=True)
+    assert jobs[2] == jobs[8], jobs
 
 
 def test_occ_doc_agg_null_doc_parity(spark):
